@@ -181,32 +181,6 @@ def make_batch_kernel(
     return _mapper
 
 
-def make_partition_kernel(
-    features: Sequence[str],
-    key_cols: Sequence[str],
-    custom_functions: Mapping[str, Callable] | None = None,
-    raise_exceptions: bool = False,
-    const_e: float | None = None,
-) -> Callable:
-    """mapInPandas function for hash-partitioned-but-unsorted input: the
-    whole partition is concatenated once, stably sorted by (keys, t, _ord)
-    in pandas, and evaluated through the same batched group kernel."""
-    batch_kernel = make_batch_kernel(
-        features, key_cols, custom_functions, raise_exceptions, const_e
-    )
-    keys = list(key_cols)
-
-    def _mapper(batches):
-        frames = [pdf for pdf in batches if len(pdf)]
-        if not frames:
-            return
-        pdf = frames[0] if len(frames) == 1 else pd.concat(frames, ignore_index=True)
-        pdf = pdf.sort_values([*keys, "t", "_ord"], kind="stable", ignore_index=True)
-        yield from batch_kernel(iter([pdf]))
-
-    return _mapper
-
-
 def featurize(
     df: DataFrame,
     features: Sequence[str],
@@ -240,12 +214,17 @@ def featurize(
         (/root/reference/cesium/featurize.py:76-95,156): a feature (most
         relevantly a custom callable) that throws yields NaN for its
         column by default; True re-raises inside the task instead.
-    strategy : "batched" (default) shuffles once on the group key with a
-        secondary sort and evaluates many groups per Arrow batch via
-        mapInPandas — the scale path; "grouped" uses plain
+    strategy : one of two values. "batched" (default) shuffles once on
+        the group key with a secondary sort and evaluates many groups per
+        Arrow batch via mapInPandas — the scale path. "grouped" uses plain
         groupBy().applyInPandas() (reference semantics, ~15 ms/group
-        dispatch overhead — only sensible for few, large groups).
+        dispatch overhead — only sensible for few, large groups). Any
+        other value raises ValueError.
     """
+    if strategy not in ("batched", "grouped"):
+        raise ValueError(
+            f"strategy must be 'batched' or 'grouped', got {strategy!r}"
+        )
     features = list(features)
     m_col = F.col(m) if isinstance(m, str) else m
     if m_col is None:
@@ -288,17 +267,6 @@ def featurize(
         return narrow.groupBy(*key_cols).applyInPandas(kernel, schema=schema)
 
     npart = num_partitions or narrow.sparkSession.conf.get("spark.sql.shuffle.partitions")
-
-    if strategy == "batched-pysort":
-        # shuffle on the group key only; each Python task materializes its
-        # partition once and sorts in pandas. Measured SLOWER than the JVM
-        # secondary sort (object-dtype string keys sort poorly in pandas:
-        # 23.0s vs 16.9s at 32 cores / 25M rows) — kept for reference.
-        mapper = make_partition_kernel(
-            features, key_cols, custom_functions, raise_exceptions, const_e
-        )
-        arranged = narrow.repartition(int(npart), *key_cols)
-        return arranged.mapInPandas(mapper, schema=schema)
 
     # default "batched": one shuffle on the group key + JVM in-partition
     # secondary sort, then whole-batch numpy evaluation (no per-group

@@ -41,7 +41,7 @@ MERGEABLE_FEATS = {
 }
 
 __all__ = ["TIERS", "MERGEABLE_FEATS", "rollup_kernel", "rollup_sql",
-           "rollup_all_tiers", "rollup_hop", "rollup_grouping_sets"]
+           "rollup_hop", "rollup_grouping_sets"]
 
 
 def rollup_kernel(
@@ -99,17 +99,6 @@ def rollup_sql(
             F.avg("t").alias("avgt"),
         )
     )
-
-
-def rollup_all_tiers(
-    df: DataFrame,
-    features: Sequence[str],
-    tiers: Sequence[str] = ("1m", "1h", "1d"),
-    **kwargs,
-) -> dict[str, DataFrame]:
-    """Materialize every retention tier. Callers persist the input once
-    (``df.cache()`` or a first-tier write) so the scan isn't repeated."""
-    return {t: rollup_kernel(df, features, t, **kwargs) for t in tiers}
 
 
 def rollup_hop(

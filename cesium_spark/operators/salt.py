@@ -24,7 +24,8 @@ from pyspark.sql import functions as F
 
 from .aggstate import finalize_states, merge_states, partial_states
 
-__all__ = ["salted_repartition", "skew_resistant_states"]
+__all__ = ["salted_repartition", "skew_resistant_states",
+           "skew_resistant_features"]
 
 
 def with_salt(df: DataFrame, tiebreak_col: str, salt_buckets: int) -> DataFrame:

@@ -16,6 +16,10 @@ features are produced by the batch kernel over closed windows downstream
 
 from __future__ import annotations
 
+import glob
+import os
+from typing import Callable
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -1323,6 +1327,41 @@ def hll_state_estimate(spark, store_root: str, p: int = 10,
     return hll_estimate_from_buckets(state, p, round_digits)
 
 
+def _batch_store_writer(
+    store_root: str, partial: Callable[[DataFrame], DataFrame]
+) -> Callable[[DataFrame, int], None]:
+    """foreachBatch function for a sum-merged exactly-once store (the
+    pattern cms_batch_fn documents): each non-empty micro-batch's
+    ``partial(batch_df)`` is written to its own ``batch=<id>`` directory
+    with overwrite, so a redelivered batch_id rewrites the same directory
+    with the same rows."""
+
+    def _apply(batch_df: DataFrame, batch_id: int) -> None:
+        if batch_df.isEmpty():
+            return
+        # partials are bounded by construction (keys x buckets rows);
+        # coalesce(1) keeps the batch dir a single deterministic file so a
+        # replay replaces it whole
+        partial(batch_df).coalesce(1).write.mode("overwrite").parquet(
+            os.path.join(store_root, f"batch={batch_id}")
+        )
+
+    return _apply
+
+
+def _read_batch_store(
+    spark, store_root: str, empty_schema: str,
+    merge: Callable[[DataFrame], DataFrame],
+) -> DataFrame:
+    """``merge`` over every committed ``batch=<id>`` partial under
+    ``store_root``; a store with no batches yet (the stream never saw a
+    non-empty batch) is the empty relation of ``empty_schema``."""
+    dirs = sorted(glob.glob(os.path.join(store_root, "batch=*")))
+    if not dirs:
+        return spark.createDataFrame([], empty_schema)
+    return merge(spark.read.parquet(*dirs))
+
+
 def cms_batch_fn(store_root: str, col: str = "tok", d: int = 4, w: int = 512):
     """foreachBatch function for a LIVE token-frequency monitor:
     maintains the deterministic Count-Min counter state
@@ -1341,21 +1380,10 @@ def cms_batch_fn(store_root: str, col: str = "tok", d: int = 4, w: int = 512):
     delivery converges to exactly-once state without a transactional
     sink. A crash mid-write leaves one torn batch directory that the
     restart's redelivery of that same batch_id rewrites whole."""
-    import os
-
     from ..operators.sketch import cms_counter_rows
 
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        fresh = cms_counter_rows(batch_df, col, d, w)
-        # <= d*w rows by construction; coalesce(1) keeps the batch dir a
-        # single deterministic file so replay rewrites are byte-stable
-        fresh.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(store_root, f"batch={batch_id}")
-        )
-
-    return _apply
+    return _batch_store_writer(
+        store_root, lambda b: cms_counter_rows(b, col, d, w))
 
 
 def cms_state_counters(spark, store_root: str) -> DataFrame:
@@ -1363,17 +1391,10 @@ def cms_state_counters(spark, store_root: str) -> DataFrame:
     equals operators/sketch.cms_counter_rows over everything ingested.
     A stream that never saw a non-empty batch has the defined empty
     sketch (every estimate reads 0)."""
-    import glob
-    import os
-
-    dirs = sorted(glob.glob(os.path.join(store_root, "batch=*")))
-    if not dirs:
-        return spark.createDataFrame([], "_row int, _b int, _n long")
-    return (
-        spark.read.parquet(*dirs)
-        .groupBy("_row", "_b")
-        .agg(F.sum("_n").cast("long").alias("_n"))
-    )
+    return _read_batch_store(
+        spark, store_root, "_row int, _b int, _n long",
+        lambda parts: parts.groupBy("_row", "_b")
+        .agg(F.sum("_n").cast("long").alias("_n")))
 
 
 def ddsketch_batch_fn(store_root: str, value_col: str = "value",
@@ -1391,21 +1412,11 @@ def ddsketch_batch_fn(store_root: str, value_col: str = "value",
     rewrite the identical bytes; the read side sums across batch
     directories, so at-least-once delivery converges to exactly-once
     state."""
-    import os
-
     from ..operators.sketch import ddsketch_buckets
 
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        fresh = ddsketch_buckets(batch_df, value_col, group_cols, alpha)
-        # groups x buckets rows by construction; coalesce(1) keeps the
-        # batch dir a single deterministic file so replays are byte-stable
-        fresh.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(store_root, f"batch={batch_id}")
-        )
-
-    return _apply
+    return _batch_store_writer(
+        store_root,
+        lambda b: ddsketch_buckets(b, value_col, group_cols, alpha))
 
 
 def ddsketch_state_buckets(
@@ -1418,17 +1429,10 @@ def ddsketch_state_buckets(
     so operators/sketch.ddsketch_quantiles reads identically off it
     (the == batch invariant the driver query pins). An empty stream is
     the defined empty sketch."""
-    import glob
-    import os
-
-    dirs = sorted(glob.glob(os.path.join(store_root, "batch=*")))
-    if not dirs:
-        return spark.createDataFrame([], f"{group_schema}, bkt int, cnt long")
-    return (
-        spark.read.parquet(*dirs)
-        .groupBy(*group_cols, "bkt")
-        .agg(F.sum("cnt").cast("long").alias("cnt"))
-    )
+    return _read_batch_store(
+        spark, store_root, f"{group_schema}, bkt int, cnt long",
+        lambda parts: parts.groupBy(*group_cols, "bkt")
+        .agg(F.sum("cnt").cast("long").alias("cnt")))
 
 
 def m4_batch_fn(store_root: str, bucket_sec: int = 3600,
@@ -1442,20 +1446,12 @@ def m4_batch_fn(store_root: str, bucket_sec: int = 3600,
     exactly-once pattern — the count field is a sum, so a merged
     running state would double-count on redelivery). State is
     series x buckets rows per batch, independent of event volume."""
-    import os
-
     from ..operators.downsample import m4_partial
 
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        fresh = m4_partial(batch_df, bucket_sec, key_cols, ts_col,
-                           value_col, tiebreak_col)
-        fresh.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(store_root, f"batch={batch_id}")
-        )
-
-    return _apply
+    return _batch_store_writer(
+        store_root,
+        lambda b: m4_partial(b, bucket_sec, key_cols, ts_col, value_col,
+                             tiebreak_col))
 
 
 def m4_state(spark, store_root: str, bucket_sec: int = 3600,
@@ -1464,20 +1460,16 @@ def m4_state(spark, store_root: str, bucket_sec: int = 3600,
     operators/downsample.m4_downsample over everything ingested (the
     merge uses the same selectors that built the partials). An empty
     stream yields the empty relation."""
-    import glob
-    import os
-
     from ..operators.downsample import m4_finalize, m4_merge
 
-    dirs = sorted(glob.glob(os.path.join(store_root, "batch=*")))
-    if not dirs:
-        return spark.createDataFrame(
-            [], "event_type string, bucket_idx long, "
-                "bucket_start timestamp, v_first double, v_last double, "
-                "v_min double, v_max double, t_min_sec double, "
-                "t_max_sec double, n long")
-    parts = spark.read.parquet(*dirs)
-    return m4_finalize(m4_merge(parts, key_cols), bucket_sec, key_cols)
+    return _read_batch_store(
+        spark, store_root,
+        "event_type string, bucket_idx long, "
+        "bucket_start timestamp, v_first double, v_last double, "
+        "v_min double, v_max double, t_min_sec double, "
+        "t_max_sec double, n long",
+        lambda parts: m4_finalize(m4_merge(parts, key_cols), bucket_sec,
+                                  key_cols))
 
 
 def grid_batch_fn(store_root: str,
@@ -1491,22 +1483,12 @@ def grid_batch_fn(store_root: str,
     directory (the cms exactly-once pattern: sums are not idempotent,
     replays rewrite identical bytes). State is keys x span-hours rows
     per batch, independent of event volume."""
-    import os
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        fresh = (
-            batch_df.groupBy(
-                *key_cols, F.date_trunc("hour", F.col(ts_col)).alias("h"))
-            .agg(F.sum(F.col(value_col).cast("double")).alias("s"),
-                 F.count("*").cast("long").alias("c"))
-        )
-        fresh.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(store_root, f"batch={batch_id}")
-        )
-
-    return _apply
+    return _batch_store_writer(
+        store_root,
+        lambda b: b.groupBy(
+            *key_cols, F.date_trunc("hour", F.col(ts_col)).alias("h"))
+        .agg(F.sum(F.col(value_col).cast("double")).alias("s"),
+             F.count("*").cast("long").alias("c")))
 
 
 def grid_state(spark, store_root: str,
@@ -1519,19 +1501,11 @@ def grid_state(spark, store_root: str,
     mann_kendall & co. build directly (the 6-decimal round absorbs the
     partial-sum association order, exactly as it absorbs Spark's own
     partition order in the batch path)."""
-    import glob
-    import os
-
-    dirs = sorted(glob.glob(os.path.join(store_root, "batch=*")))
-    if not dirs:
-        return spark.createDataFrame(
-            [], f"{key_schema}, h timestamp, x double")
-    return (
-        spark.read.parquet(*dirs)
-        .groupBy(*key_cols, "h")
+    return _read_batch_store(
+        spark, store_root, f"{key_schema}, h timestamp, x double",
+        lambda parts: parts.groupBy(*key_cols, "h")
         .agg(F.round(F.sum("s") / F.sum("c") + F.lit(1e-9),
-                     round_digits).alias("x"))
-    )
+                     round_digits).alias("x")))
 
 
 def streaming_holt(

@@ -119,6 +119,12 @@ def test_batched_equals_grouped_strategy(spark, transcripts):
     pd.testing.assert_frame_equal(a, b)  # bit-exact across physical strategies
 
 
+@pytest.mark.parametrize("strategy", ["batched-pysort", "bathced"])
+def test_unknown_strategy_raises(spark, transcripts, strategy):
+    with pytest.raises(ValueError, match="strategy"):
+        featurize(transcripts, ["mean"], strategy=strategy)
+
+
 def test_multichannel_featurize(spark, transcripts):
     """Two channels over shared t/e axes: per-channel values equal the
     single-channel runs; columns follow the {feature}_{channel} flattening."""

@@ -1,5 +1,5 @@
-"""Snapshot-table shim (append / dynamic overwrite / time travel), the
-reference-format CSV reader, and multimodal plumbing."""
+"""Snapshot-table shim (append / dynamic overwrite / time travel) and the
+reference-format CSV reader."""
 
 import os
 
@@ -10,12 +10,6 @@ from pyspark.sql import functions as F
 
 from cesium_spark.sources.table import SnapshotTable
 from cesium_spark.sources.transcripts import read_ts_csv
-from cesium_spark.operators.multimodal import (
-    attach_media_metadata,
-    dedup_media_exact,
-    extract_features,
-    MEDIA_FEATURE_DIM,
-)
 
 
 def _df(spark, rows):
@@ -121,34 +115,6 @@ def test_read_ts_csv_matches_reference_parse(spark, tmp_path):
     p2.write_text("1.0,10.0\n2.0,11.0\n")
     df2 = read_ts_csv(spark, str(p2)).toPandas()
     assert (df2["e"] == 1e-4).all()
-
-
-@pytest.fixture()
-def media(spark):
-    rows = [
-        (1, "image/png", bytearray(b"payload-one"), 8, 8, None),
-        (2, "image/png", bytearray(b"payload-one"), 8, 8, None),  # exact dup of 1
-        (3, "audio/wav", bytearray(b"other"), None, None, 1200),
-    ]
-    return spark.createDataFrame(
-        rows, "media_id long, media_type string, payload binary, width int, height int, duration_ms int"
-    )
-
-
-def test_media_metadata_and_exact_dedup(spark, media):
-    meta = attach_media_metadata(media).toPandas()
-    assert list(meta["n_bytes"]) == [11, 11, 5]
-    groups = dedup_media_exact(media).toPandas().sort_values("keeper_id")
-    assert list(groups["group_size"]) == [2, 1]
-    assert list(groups["keeper_id"]) == [1, 3]
-
-
-def test_media_feature_extraction_stub(spark, media):
-    feats = extract_features(media).toPandas().set_index("media_id")
-    assert all(len(v) == MEDIA_FEATURE_DIM for v in feats["features"])
-    # deterministic: same payload -> same features; different -> different
-    np.testing.assert_array_equal(feats.loc[1, "features"], feats.loc[2, "features"])
-    assert not np.array_equal(feats.loc[1, "features"], feats.loc[3, "features"])
 
 
 def test_featurize_csv_series_matches_golden(spark):
