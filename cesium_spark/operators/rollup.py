@@ -28,7 +28,7 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..kernel import SECONDS_PER_DAY, featurize, ts_micros
+from ..kernel import SECONDS_PER_DAY, featurize, ts_micros, window_micros
 
 TIERS = {"1m": "1 minute", "1h": "1 hour", "1d": "1 day"}
 
@@ -43,11 +43,26 @@ MERGEABLE_FEATS = {
 __all__ = ["TIERS", "MERGEABLE_FEATS", "rollup_kernel", "rollup_sql",
            "rollup_hop", "rollup_grouping_sets"]
 
+_DAY_MICROS = window_micros("1 day")
+
+
+def _day_nested_windows(tiers: Sequence[str]) -> list[str]:
+    """Window width of each tier; ValueError unless every width divides
+    one day and the coarsest width, so that no tier window crosses a UTC
+    day or a window of a coarser tier."""
+    windows = [TIERS.get(t, t) for t in tiers]
+    micros = [window_micros(w) for w in windows]
+    for t, us in zip(tiers, micros):
+        if _DAY_MICROS % us or max(micros) % us:
+            raise ValueError(
+                f"tier {t!r} does not divide one day and the coarsest tier")
+    return windows
+
 
 def rollup_kernel(
     df: DataFrame,
     features: Sequence[str],
-    tier: str,
+    tier: str | Sequence[str],
     key_col: str = "conv_id",
     ts_col: str = "ts",
     tiebreak_col: str = "turn_idx",
@@ -55,12 +70,24 @@ def rollup_kernel(
     e: Column | str | None = None,
 ) -> DataFrame:
     """Full-registry featurization at one tier; output one row per
-    (series, window_start)."""
-    window = TIERS.get(tier, tier)
-    return featurize(
+    (series, window_start). A sequence of tiers, e.g. ("1m", "1h", "1d"),
+    is computed in one pass (one exchange on (series, coarsest window),
+    one sort, one mapInPandas) and labelled by a ``tier`` column holding
+    the tier names as given; every tier's width must divide one day and
+    the coarsest tier's width, else ValueError."""
+    if isinstance(tier, str):
+        return featurize(
+            df, features, key_col=key_col, ts_col=ts_col,
+            tiebreak_col=tiebreak_col, m=m, e=e, window=TIERS.get(tier, tier),
+        )
+    tiers = list(tier)
+    windows = _day_nested_windows(tiers)
+    out = featurize(
         df, features, key_col=key_col, ts_col=ts_col, tiebreak_col=tiebreak_col,
-        m=m, e=e, window=window,
+        m=m, e=e, window=windows,
     )
+    names = F.create_map(*[F.lit(x) for pair in zip(windows, tiers) for x in pair])
+    return out.withColumn("tier", names[F.col("tier")])
 
 
 def rollup_sql(

@@ -6,10 +6,10 @@ Usage:
       jobs/rollup_job.py --input <parquet> --output <dir> \
       [--tiers 1m,1h,1d] [--features f1,f2,...] [--bucket-days 7] [--resume]
 
-Reads the transcript table, runs the tier rollups (kernel featurization)
-in per-(tier, day-bucket) committed units (see cesium_spark.jobs), writes
-one parquet dir per unit plus the lineage/metrics log enabling exact
-resume mid-tier.
+Reads the transcript table, runs every dirty tier rollup (kernel
+featurization) in one pass and commits it in per-(tier, day-bucket) units
+(see cesium_spark.jobs), writing one parquet dir per unit plus the
+lineage/metrics log enabling exact resume mid-tier.
 """
 
 from __future__ import annotations

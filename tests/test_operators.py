@@ -112,6 +112,88 @@ def test_incremental_nonmergeable_equals_full(spark, transcripts):
     pd.testing.assert_frame_equal(got, full)
 
 
+MULTI_TIER_FEATS = ["n_epochs", "mean", "std", "median", "stetson_j",
+                    "cads_avg", "max_slope"]
+
+
+def _by_window(pdf):
+    keys = [k for k in ("tier", "conv_id", "window_start") if k in pdf.columns]
+    return pdf.sort_values(keys).reset_index(drop=True)
+
+
+def test_multi_tier_rollup_kernel_equals_single_tiers(spark, transcripts):
+    """One pass over ("1m", "1h", "1d") gives each tier exactly the rows
+    of its own single-tier rollup_kernel, matches the grouped reference
+    strategy, and does not depend on partitioning or Arrow batching."""
+    from cesium_spark.kernel import featurize
+    from cesium_spark.operators.rollup import TIERS
+
+    tiers = ("1m", "1h", "1d")
+    multi = _by_window(rollup_kernel(transcripts, MULTI_TIER_FEATS, tiers).toPandas())
+    assert sorted(set(multi["tier"])) == sorted(tiers)
+    for tier in tiers:
+        got = multi[multi["tier"] == tier].drop(columns="tier").reset_index(drop=True)
+        want = _by_window(rollup_kernel(transcripts, MULTI_TIER_FEATS, tier).toPandas())
+        pd.testing.assert_frame_equal(got, want, check_exact=True)
+
+    # the grouped reference (one applyInPandas call per window) on the
+    # small conversations: n_epochs exact, the rest to summation order
+    small_ids = transcripts.groupBy("conv_id").count().filter("count < 100")
+    small = transcripts.join(small_ids.select("conv_id"), "conv_id")
+    small_multi = _by_window(rollup_kernel(small, MULTI_TIER_FEATS, tiers).toPandas())
+    for tier in tiers:
+        got = small_multi[small_multi["tier"] == tier].reset_index(drop=True)
+        ref = _by_window(featurize(small, MULTI_TIER_FEATS, window=TIERS[tier],
+                                   strategy="grouped").toPandas())
+        assert len(got) == len(ref) > 0
+        assert (got["window_start"] == ref["window_start"]).all()
+        np.testing.assert_array_equal(got["n_epochs"], ref["n_epochs"])
+        for f in MULTI_TIER_FEATS[1:]:
+            np.testing.assert_allclose(got[f], ref[f], rtol=1e-9, atol=0,
+                                       equal_nan=True, err_msg=f"{tier}.{f}")
+
+    # bit-identical across input partitioning, shuffle width and Arrow
+    # batch size (small batches split windows across batch boundaries)
+    conf = spark.conf
+    saved = {k: conf.get(k) for k in ("spark.sql.shuffle.partitions",
+                                      "spark.sql.execution.arrow.maxRecordsPerBatch")}
+    try:
+        for n, batch in ((1, 97), (16, 50000)):
+            conf.set("spark.sql.shuffle.partitions", str(n))
+            conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", str(batch))
+            again = rollup_kernel(transcripts.repartition(n), MULTI_TIER_FEATS, tiers)
+            pd.testing.assert_frame_equal(_by_window(again.toPandas()), multi,
+                                          check_exact=True)
+    finally:
+        for k, v in saved.items():
+            conf.set(k, v)
+
+
+@pytest.mark.parametrize("tiers", [("1 week",), ("1m", "7 hours"), ("40 minutes", "1h")])
+def test_tiers_that_do_not_nest_raise(spark, transcripts, tmp_path, tiers):
+    """A tier wider than a day, or one that does not divide a day or the
+    coarsest tier, would split windows across the one-pass exchange or
+    across day buckets: rejected, not silently written partial."""
+    from cesium_spark.jobs import run_rollup
+
+    inp = str(tmp_path / "in")
+    transcripts.limit(10).write.parquet(inp)
+    with pytest.raises(ValueError, match="divide"):
+        run_rollup(spark, inp, str(tmp_path / "out"), tiers=tiers,
+                   features=["mean"], verbose=False)
+    assert not (tmp_path / "out").exists()
+    with pytest.raises(ValueError, match="divide"):
+        rollup_kernel(transcripts, ["mean"], tiers)
+
+
+def test_multi_width_grouped_strategy_raises(spark, transcripts):
+    from cesium_spark.kernel import featurize
+
+    with pytest.raises(ValueError, match="strategy"):
+        featurize(transcripts, ["mean"], window=["1 minute", "1 hour"],
+                  strategy="grouped")
+
+
 def test_lineage_log_roundtrip(tmp_path):
     from cesium_spark.streaming.checkpoint import LineageLog
 
@@ -212,6 +294,88 @@ def test_run_rollup_units_and_resume(spark, transcripts, tmp_path):
     b = spark.read.parquet(f"{out2}/tier=1h").toPandas() \
         .sort_values(["conv_id", "window_start"]).reset_index(drop=True)
     pd.testing.assert_frame_equal(a, b)
+
+
+def _rollup_files(out):
+    import glob
+    import os
+
+    return {p: os.stat(p).st_mtime_ns
+            for p in glob.glob(os.path.join(out, "tier=*", "bucket=*", "*"))}
+
+
+def _rollup_jobs(spark, *args, **kwargs):
+    """Spark jobs one run_rollup call starts, counted by its job group."""
+    import uuid
+    from cesium_spark.jobs import run_rollup
+
+    sc = spark.sparkContext
+    group = f"run-rollup-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        run_rollup(spark, *args, **kwargs)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_run_rollup_one_pass_resume_three_tiers(spark, transcripts, tmp_path):
+    """Three tiers in one pass: a lost (tier, bucket) commit reruns that
+    unit alone, rewriting only its own partition; the lineage directory
+    survives the dynamic-overwrite write; every committed windows_out is
+    the partition's row count; the output equals a fresh run; and the
+    job count of a call does not grow with the number of buckets."""
+    import os
+    from cesium_spark.jobs import run_rollup
+    from cesium_spark.streaming.checkpoint import LineageLog
+
+    inp = str(tmp_path / "in")
+    transcripts.write.mode("overwrite").parquet(inp)
+    out1, out2 = str(tmp_path / "o1"), str(tmp_path / "o2")
+    kw = dict(tiers=("1m", "1h", "1d"), features=["n_epochs", "mean", "median"],
+              bucket_days=3, verbose=False)
+
+    r1 = run_rollup(spark, inp, out1, **kw)
+    assert all(not u["skipped"] for u in r1) and len(r1) == 3 * 3
+    before = _rollup_files(out1)
+
+    victim = next(u["unit"] for u in r1 if u["unit"].startswith("tier-1h-"))
+    tier, key = victim[len("tier-"):].split("-days-")
+    victim_dir = os.path.join(out1, f"tier={tier}", f"bucket={key}") + os.sep
+    os.remove(os.path.join(out1, "_lineage", f"{victim}.json"))
+    r2 = run_rollup(spark, inp, out1, resume=True, **kw)
+    assert [u["unit"] for u in r2 if not u["skipped"]] == [victim]
+    after = _rollup_files(out1)
+    untouched = {p: m for p, m in before.items() if not p.startswith(victim_dir)}
+    assert untouched == {p: m for p, m in after.items() if not p.startswith(victim_dir)}
+    rewritten = [p for p in after if p.startswith(victim_dir)]
+    assert rewritten and not set(rewritten) & set(before)
+
+    log = LineageLog(os.path.join(out1, "_lineage"))
+    assert log.units() == sorted(u["unit"] for u in r1)
+    for u in r1:
+        t, k = u["unit"][len("tier-"):].split("-days-")
+        n = spark.read.parquet(os.path.join(out1, f"tier={t}", f"bucket={k}")).count()
+        assert log.read(u["unit"])["metrics"]["windows_out"] == n > 0
+
+    run_rollup(spark, inp, out2, **kw)
+    for t in kw["tiers"]:
+        a, b = (_by_window(spark.read.parquet(f"{o}/tier={t}").toPandas())
+                for o in (out1, out2))
+        pd.testing.assert_frame_equal(a, b, check_exact=True)
+
+    # one pass per call: a second day bucket adds no Spark job
+    one, two = str(tmp_path / "one"), str(tmp_path / "two")
+    day = F.date_trunc("day", "ts")
+    first_days = transcripts.select(day.alias("d")).distinct().orderBy("d").limit(2)
+    days = [r["d"] for r in first_days.collect()]
+    transcripts.filter(day == F.lit(days[0])).write.parquet(one)
+    transcripts.filter(day.isin(days)).write.parquet(two)
+    kw1 = dict(kw, bucket_days=1)
+    assert _rollup_jobs(spark, one, str(tmp_path / "r1"), **kw1) == \
+        _rollup_jobs(spark, two, str(tmp_path / "r2"), **kw1)
 
 
 def test_retention_drops_only_committed_old_days(spark, tmp_path):

@@ -26,11 +26,24 @@ def _plan(df):
 
 def test_featurize_single_exchange(spark, tiny):
     """The kernel path: exactly ONE hash-partitioning exchange (on the
-    group key), the secondary sort stays in-partition."""
+    group key), the secondary sort stays in-partition. Several nested
+    widths share that one exchange (on key and coarsest window) and one
+    MapInPandas, and text reaches the exchange only inside length()."""
+    import re
+
     out = featurize(tiny, ["n_epochs", "mean", "std"], window="1 hour")
     plan = _plan(out)
     assert plan.count("Exchange hashpartitioning") == 1
     assert "MapInPandas" in plan
+
+    multi = featurize(tiny, ["n_epochs", "mean", "std"],
+                      window=["1 minute", "1 hour", "1 day"])
+    phys = _plan(multi).split("== Physical Plan ==")[-1]
+    assert phys.count("Exchange hashpartitioning") == 1
+    assert phys.count("MapInPandas") == 1
+    exchange_input = phys.split("Exchange hashpartitioning")[1].split("FileScan")[0]
+    assert "length(text" in exchange_input
+    assert not re.search(r"[,\[] ?text#\d+[,\]]", exchange_input)
 
 
 def test_rollup_sql_is_pure_jvm_with_partial_agg(spark, tiny):
@@ -67,7 +80,7 @@ def test_horizon_filter_pushed_to_parquet_scan(spark, tiny, tmp_path):
 
 
 def test_narrow_projection_before_kernel_shuffle(spark, tiny, tmp_path):
-    """The featurize shuffle carries only (key, t, m, e, _ord) — the text
+    """The featurize shuffle carries only (key, _us, m, e, _ord) — the text
     column is consumed by length() at scan time and never shuffled."""
     path = str(tmp_path / "t2")
     tiny.write.mode("overwrite").parquet(path)
